@@ -11,8 +11,16 @@ a matching input fingerprint. Pruned partitions are never scanned (the
 Atomicity without Iceberg transactions (SURVEY.md §7.3 hard part 4): result
 parquet is written FIRST (dynamic partition overwrite, so a re-run of a
 failed partition replaces its output), the ``done`` state row is appended
-LAST. A crash between the two re-runs the partition; output overwrite makes
-that idempotent.
+LAST. The engine runs the ``verdicts`` and ``violations`` writes
+concurrently, but the state append starts only after BOTH have finished,
+and the state metrics are counted from those written files. A crash
+anywhere before the append re-runs the partition; output overwrite makes
+that idempotent. A crash after it leaves a complete, committed partition.
+
+Resume reads the state once: ``recorded_lineage`` checks that the state
+dir exists through the Hadoop FS API (a fresh out dir costs no Spark job)
+and collects the latest ``done`` lineage per partition, from which both
+the content-gate candidates and the done set (``select_done``) derive.
 
 Iceberg deployment shape (design note — the sandbox has no
 iceberg-spark-runtime jar and no network to fetch one, so this seam is
@@ -78,13 +86,18 @@ def state_path(out_dir: str) -> str:
     return os.path.join(out_dir, STATE_DIR)
 
 
+def state_exists(spark: SparkSession, out_dir: str) -> bool:
+    """Whether ``<out>/_validation_state`` exists (Hadoop FS API, so object
+    stores work too; no Spark job)."""
+    path = spark._jvm.org.apache.hadoop.fs.Path(state_path(out_dir))
+    return bool(path.getFileSystem(spark._jsc.hadoopConfiguration()).exists(path))
+
+
 def read_state(spark: SparkSession, out_dir: str) -> DataFrame:
     """Latest state row per partition (empty frame if no state yet)."""
-    path = state_path(out_dir)
-    try:
-        raw = spark.read.schema(VALIDATION_STATE).parquet(path)
-    except Exception:
+    if not state_exists(spark, out_dir):
         return spark.createDataFrame([], VALIDATION_STATE)
+    raw = spark.read.schema(VALIDATION_STATE).parquet(state_path(out_dir))
     w = Window.partitionBy("partition").orderBy(F.col("finished_at").desc())
     return (
         raw.withColumn("_rn", F.row_number().over(w))
@@ -93,34 +106,34 @@ def read_state(spark: SparkSession, out_dir: str) -> DataFrame:
     )
 
 
+def select_done(
+    lineage: dict[str, dict],
+    fingerprints: dict[str, str] | None = None,
+    code_version: str | None = None,
+) -> set[str]:
+    """Partitions of ``recorded_lineage`` output that count as done — and,
+    when fingerprints of the current input are supplied, whose recorded
+    input fingerprint still matches (changed input invalidates the
+    checkpoint, reference X4 memoization semantics). When ``code_version``
+    is supplied, the recorded lineage must match it too: bumping
+    engine.CODE_VERSION re-runs every checkpoint written under older
+    verdict/constraint semantics."""
+    return {
+        p
+        for p, lin in lineage.items()
+        if (fingerprints is None or lin.get("input_fingerprint") == fingerprints.get(p))
+        and (code_version is None or lin.get("code_version") == code_version)
+    }
+
+
 def done_partitions(
     spark: SparkSession,
     out_dir: str,
     fingerprints: dict[str, str] | None = None,
     code_version: str | None = None,
 ) -> set[str]:
-    """Partitions whose latest state is done — and, when fingerprints of the
-    current input are supplied, whose recorded input fingerprint still
-    matches (changed input invalidates the checkpoint, reference X4
-    memoization semantics). When ``code_version`` is supplied, the recorded
-    lineage must match it too: bumping engine.CODE_VERSION re-runs every
-    checkpoint written under older verdict/constraint semantics."""
-    rows = read_state(spark, out_dir).filter(F.col("status") == "done").collect()
-    done = set()
-    for r in rows:
-        if fingerprints is not None or code_version is not None:
-            try:
-                lineage = json.loads(r["lineage"] or "{}")
-            except json.JSONDecodeError:
-                continue
-            if fingerprints is not None and lineage.get(
-                "input_fingerprint"
-            ) != fingerprints.get(r["partition"]):
-                continue
-            if code_version is not None and lineage.get("code_version") != code_version:
-                continue
-        done.add(r["partition"])
-    return done
+    """``select_done`` over a fresh state read."""
+    return select_done(recorded_lineage(spark, out_dir), fingerprints, code_version)
 
 
 def write_state_rows(
@@ -236,8 +249,17 @@ def fingerprints_from_identities(ids: DataFrame) -> dict[str, str]:
 
 
 def recorded_lineage(spark: SparkSession, out_dir: str) -> dict[str, dict]:
-    """Latest 'done' lineage dict per partition (empty on no/bad state)."""
-    rows = read_state(spark, out_dir).filter(F.col("status") == "done").collect()
+    """Latest 'done' lineage dict per partition (a lineage that is not
+    valid JSON is left out, so its partition re-validates). One state
+    read; none at all when the out dir holds no state yet."""
+    if not state_exists(spark, out_dir):
+        return {}
+    rows = (
+        read_state(spark, out_dir)
+        .filter(F.col("status") == "done")
+        .select("partition", "lineage")
+        .collect()
+    )
     out: dict[str, dict] = {}
     for r in rows:
         try:

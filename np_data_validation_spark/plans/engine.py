@@ -8,13 +8,20 @@ decides WHICH partitions run; all data work is one declarative plan per
 batch so the cluster stays saturated (the reference processed one session
 at a time, single-threaded).
 
-Scale shape per batch (SURVEY.md §3.1 Spark restatement):
-    scan pending partitions (partition-pruned, column-pruned)
-      -> pandas-UDF tok_hash (Arrow batches)
-      -> doc_id join vs manifest (+ content probe for misses)
-      -> CASE verdict -> violations + per-row rollup
-      -> per-partition metrics aggregation
-      -> write results (dynamic partition overwrite) -> append state rows
+Scale shape of a run (SURVEY.md §3.1 Spark restatement):
+    cheap input fingerprints; ONE state read (none on a fresh out dir)
+    manifest audit, concurrent with the whole batch loop
+    per batch:
+      scan pending partitions (partition-pruned, column-pruned)
+        -> Arrow tok_hash -> doc_id join vs manifest (+ content probe)
+        -> pair / identity scratch tables under _work (plans.onepass)
+      -> commit, overlapped: the rollup plan written straight to
+         ``verdicts`` (the rollup runs and lands once) || ``violations``
+         || content fingerprints from the identity table
+      -> per-partition metrics: one aggregate over the just-written
+         verdicts/violations partitions
+      -> append state rows (the commit point: after both result writes,
+         and, for the last batch, after the manifest audit)
 """
 
 from __future__ import annotations
@@ -165,25 +172,56 @@ class RunResult:
         return sum(m.get("rows", 0) for m in self.metrics.values())
 
 
-def _partition_metrics(rolled: DataFrame, violations: DataFrame) -> dict[str, dict]:
-    """Per-source metrics (small collect: one row per partition/class)."""
-    out: dict[str, dict] = {}
-    for r in (
-        rolled.groupBy("source")
-        .pivot("row_status", ["pass", "fail", "unknown"])
+ROW_STATUSES = ("pass", "fail", "unknown")
+
+
+def _write_parts(df: DataFrame, path: str) -> None:
+    """Replace the partitions present in ``df`` under ``path`` (dynamic
+    partition overwrite as a per-write option: the caller's session conf
+    is left as it was)."""
+    (
+        df.withColumn("_part", F.col("source"))
+        .write.mode("overwrite")
+        .option("partitionOverwriteMode", "dynamic")
+        .partitionBy("_part")
+        .parquet(path)
+    )
+
+
+def _written_metrics(spark: SparkSession, out_dir: str, batch: list[str]) -> dict[str, dict]:
+    """Per-partition metrics counted from the batch's just-written
+    ``verdicts`` and ``violations`` partitions: one aggregate, one small
+    collect, nothing re-derived from the pair tables. ``_part`` is read
+    as a string: partition-value type inference would turn a source named
+    ``007`` into the integer 7."""
+
+    def written(name: str, col: str, kind: str) -> DataFrame:
+        return (
+            spark.read.schema(f"{col} string, _part string")
+            .parquet(os.path.join(out_dir, name))
+            .filter(F.col("_part").isin(batch))
+            .select("_part", F.lit(kind).alias("kind"), F.col(col).alias("key"))
+        )
+
+    rows = (
+        written("verdicts", "row_status", "status")
+        .unionByName(written("violations", "violation", "violation"))
+        .groupBy("_part", "kind", "key")
         .count()
         .collect()
-    ):
-        out.setdefault(r["source"], {})
-        m = out[r["source"]]
-        m["pass"] = r["pass"] or 0
-        m["fail"] = r["fail"] or 0
-        m["unknown"] = r["unknown"] or 0
-        m["rows"] = m["pass"] + m["fail"] + m["unknown"]
-        m["partition_status"] = "pass" if (m["fail"] == 0) else "fail"
-    for r in violations.groupBy("source", "violation").count().collect():
-        m = out.setdefault(r["source"], {})
-        m.setdefault("violations", {})[r["violation"]] = r["count"]
+    )
+    out: dict[str, dict] = {}
+    for r in rows:
+        m = out.setdefault(r["_part"], {})
+        if r["kind"] == "violation":
+            m.setdefault("violations", {})[r["key"]] = r["count"]
+        else:
+            m[r["key"]] = r["count"]
+    for m in out.values():
+        for k in ROW_STATUSES:
+            m.setdefault(k, 0)
+        m["rows"] = sum(m[k] for k in ROW_STATUSES)
+        m["partition_status"] = "pass" if m["fail"] == 0 else "fail"
     return out
 
 
@@ -295,7 +333,6 @@ def run_validation(
     resume: bool = True,
     commit_batch: int | None = None,
     hash_method: str = "pandas_udf",
-    join_strategy: str = "auto",
     content_aware: bool = False,
     keep_audit: int | None = None,
 ) -> RunResult:
@@ -323,6 +360,16 @@ def run_validation(
     construction (different shapes), so switching modes re-validates
     everything once.
 
+    Commit protocol per batch: clear the batch's ``violations`` partitions,
+    then write ``verdicts`` and ``violations`` (and derive the content
+    fingerprints) concurrently, count the metrics from the written files,
+    and append the state rows only after both writes finished. The
+    manifest audit runs beside the batch loop and is awaited before the
+    LAST batch's state append: once every partition is committed the audit
+    is complete, and a crash before that leaves a batch pending, whose
+    resume rewrites the audit too. Pool workers run with the caller's
+    Spark local properties (job group, scheduler pool).
+
     ``keep_audit``: retain at most this many batch-level pair-table audit
     dirs under ``<out>/_work`` (most recent across runs — mtime with a
     (run, batch-index) tie-break for coarse-mtime filesystems), pruning
@@ -332,7 +379,10 @@ def run_validation(
     partitions never leave a stale pair table masquerading as current: the
     latest run's dirs are the authoritative audit trail.
     """
+    from concurrent.futures import ThreadPoolExecutor
+
     from np_data_validation_spark.plans.onepass import validate_onepass
+    from np_data_validation_spark.session import submit_inheriting
 
     snapshot = spark.read.parquet(snapshot_path)
     manifest = spark.read.parquet(manifest_path)
@@ -342,98 +392,107 @@ def run_validation(
     all_parts = sorted(fps)
     done: set[str] = set()
     if resume:
+        lineage = CP.recorded_lineage(spark, out_dir)
+        gate_fps = fps
         if content_aware:
             # Only partitions with a PLAUSIBLE done checkpoint (matching
             # code_version, content-shaped recorded fingerprint whose cheap
             # prefix matches the current cheap fingerprint) pay the payload
             # re-hash; every other partition re-validates, and its content
             # fingerprint falls out of the validation pass itself.
-            lineages = CP.recorded_lineage(spark, out_dir)
             cand = [
                 p
-                for p, lin in lineages.items()
+                for p, lin in lineage.items()
                 if p in fps
                 and lin.get("code_version") == CODE_VERSION
                 and str(lin.get("input_fingerprint", "")).count(":") == 3
                 and str(lin["input_fingerprint"]).rsplit(":", 1)[0] == fps[p]
             ]
-            gate_fps = (
-                CP.content_fingerprints(snapshot, cand, hash_method) if cand else {}
-            )
-            done = CP.done_partitions(
-                spark, out_dir, gate_fps, code_version=CODE_VERSION
-            )
-        else:
-            done = CP.done_partitions(spark, out_dir, fps, code_version=CODE_VERSION)
+            gate_fps = CP.content_fingerprints(snapshot, cand, hash_method) if cand else {}
+        done = CP.select_done(lineage, gate_fps, code_version=CODE_VERSION)
     pending = [p for p in all_parts if p not in done]
 
     result = RunResult(run_id="", validated_partitions=[], skipped_partitions=sorted(done))
     if not pending:
         return result
 
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
     batches = (
         [pending]
         if commit_batch is None
         else [pending[i : i + commit_batch] for i in range(0, len(pending), commit_batch)]
     )
     run_id = uuid.uuid4().hex
-    for bi, batch in enumerate(batches):
-        # partition pruning: only pending sources are scanned
-        snap_b = snapshot.filter(F.col("source").isin(batch))
-        # one-pass plan: payload scanned once into the batch's pair table;
-        # rollup, violations and stats derive from it without payload
-        # rescans. Work dirs are run+batch scoped (never partition-value
-        # named: values would flow unsanitized into paths, and a partition
-        # re-validated in a differently-composed later batch would leave a
-        # stale table under its old batch dir).
-        res = validate_onepass(
-            spark, snap_b, manifest,
-            os.path.join(out_dir, "_work", f"run={run_id}", f"batch={bi}"),
-            hash_method=hash_method,
+    verdicts_dir = os.path.join(out_dir, "verdicts")
+    violations_dir = os.path.join(out_dir, "violations")
+    with ThreadPoolExecutor(max_workers=3) as pool:
+        # global manifest audit (once per run; overwrites prior audit). It
+        # depends only on the inputs, so it overlaps the batch loop.
+        audit_f = submit_inheriting(
+            pool,
+            spark,
+            lambda: manifest_audit(snapshot, manifest)
+            .write.mode("overwrite")
+            .parquet(os.path.join(out_dir, "manifest_violations")),
         )
-        rolled, violations = res.rolled, res.violations
-        # 1) results first (idempotent per-partition replacement: explicit
-        #    clear + dynamic overwrite — overwrite alone leaves stale rows
-        #    when a re-run produces zero rows for a partition)
-        _clear_partitions(spark, os.path.join(out_dir, "violations"), batch)
-        rolled.withColumn("_part", F.col("source")).write.mode("overwrite").partitionBy(
-            "_part"
-        ).parquet(os.path.join(out_dir, "verdicts"))
-        violations.withColumn("_part", F.col("source")).write.mode(
-            "overwrite"
-        ).partitionBy("_part").parquet(os.path.join(out_dir, "violations"))
-        # 2) state rows LAST (the commit point). Content-aware fingerprints
-        #    derive from the batch's written identity table — no payload
-        #    rescan (plans.checkpoint.fingerprints_from_identities).
-        batch_fps = (
-            CP.fingerprints_from_identities(res.ids) if content_aware else fps
-        )
-        metrics = _partition_metrics(rolled, violations)
-        state_rows = [
-            {
-                "partition": p,
-                "status": "done",
-                "metrics": metrics.get(p, {"rows": 0}),
-                "lineage": {
-                    "input_fingerprint": batch_fps.get(p, fps[p]),
-                    "code_version": CODE_VERSION,
-                    "snapshot_path": snapshot_path,
-                    "manifest_path": manifest_path,
-                },
-            }
-            for p in batch
-        ]
-        CP.write_state_rows(spark, out_dir, state_rows, run_id=run_id)
-        result.run_id = run_id
-        result.validated_partitions.extend(batch)
-        result.metrics.update(metrics)
-        # 3) bounded audit trail (post-commit, like streaming's reclaim)
-        if keep_audit is not None:
-            _prune_audit_dirs(spark, os.path.join(out_dir, "_work"), keep_audit)
-
-    # global manifest audit (once per run; overwrites prior audit)
-    manifest_audit(snapshot, manifest).write.mode("overwrite").parquet(
-        os.path.join(out_dir, "manifest_violations")
-    )
+        for bi, batch in enumerate(batches):
+            # partition pruning: only pending sources are scanned
+            snap_b = snapshot.filter(F.col("source").isin(batch))
+            # one-pass plan: payload scanned once into the batch's pair
+            # table; rollup, violations and stats derive from it without
+            # payload rescans. Work dirs are run+batch scoped (never
+            # partition-value named: values would flow unsanitized into
+            # paths, and a partition re-validated in a differently-composed
+            # later batch would leave a stale table under its old batch
+            # dir). The rollup comes back unwritten: its one write is the
+            # verdicts write below.
+            res = validate_onepass(
+                spark, snap_b, manifest,
+                os.path.join(out_dir, "_work", f"run={run_id}", f"batch={bi}"),
+                hash_method=hash_method,
+                write_rolled=False,
+            )
+            # 1) results first (idempotent per-partition replacement:
+            #    explicit clear + dynamic overwrite — overwrite alone leaves
+            #    stale rows when a re-run produces zero rows for a
+            #    partition). The two writes and the content fingerprints
+            #    (from the written identity table, no payload rescan) are
+            #    independent, so they run concurrently.
+            _clear_partitions(spark, violations_dir, batch)
+            writes = [
+                submit_inheriting(pool, spark, _write_parts, res.rolled, verdicts_dir),
+                submit_inheriting(pool, spark, _write_parts, res.violations, violations_dir),
+            ]
+            fps_f = (
+                submit_inheriting(pool, spark, CP.fingerprints_from_identities, res.ids)
+                if content_aware
+                else None
+            )
+            for f in writes:
+                f.result()
+            metrics = _written_metrics(spark, out_dir, batch)
+            batch_fps = fps_f.result() if fps_f else fps
+            if bi == len(batches) - 1:
+                audit_f.result()
+            # 2) state rows LAST (the commit point)
+            state_rows = [
+                {
+                    "partition": p,
+                    "status": "done",
+                    "metrics": metrics.get(p, {"rows": 0}),
+                    "lineage": {
+                        "input_fingerprint": batch_fps.get(p, fps[p]),
+                        "code_version": CODE_VERSION,
+                        "snapshot_path": snapshot_path,
+                        "manifest_path": manifest_path,
+                    },
+                }
+                for p in batch
+            ]
+            CP.write_state_rows(spark, out_dir, state_rows, run_id=run_id)
+            result.run_id = run_id
+            result.validated_partitions.extend(batch)
+            result.metrics.update(metrics)
+            # 3) bounded audit trail (post-commit, like streaming's reclaim)
+            if keep_audit is not None:
+                _prune_audit_dirs(spark, os.path.join(out_dir, "_work"), keep_audit)
     return result

@@ -59,7 +59,8 @@ class OnepassResult:
     rolled: DataFrame      # verdict rollup (engine verdict schema)
     violations: DataFrame  # schema.VIOLATIONS shape
     stats: DataFrame       # operators.stats.partition_stats shape
-    n_rows: int            # validated (doc_id, source) subjects
+    n_rows: int | None     # validated (doc_id, source) subjects (None with
+    #                        write_rolled=False: the caller's write runs the rollup)
     n_missing: int         # subjects probed by content
     salt_buckets_used: int | None = None  # rollup salting engaged (auto/forced)
     probe_salted: bool = False  # manifest-side salting engaged on the probe join
@@ -535,6 +536,7 @@ def validate_onepass(
     skew_ratio: float | None = None,
     skew_min_hot_rows: int | None = None,
     derive_counts: bool = False,
+    write_rolled: bool = True,
 ) -> OnepassResult:
     """Full constraint pass: the payload is scanned once into the written
     slim pair table; probe, rollup, violations and stats all derive from
@@ -547,12 +549,19 @@ def validate_onepass(
     when one is found — skew handled explicitly per the north_rule, zero
     plan change on well-distributed input. Pass an int to force, None to
     disable. ``skew_ratio`` / ``skew_min_hot_rows`` override the detector
-    thresholds (mainly for tests)."""
+    thresholds (mainly for tests).
+
+    ``write_rolled=False`` skips the ``rolled`` scratch table: ``rolled``
+    is then the unwritten rollup plan over the written pair tables, for a
+    caller that writes it to its own sink (the engine's and the stream's
+    ``verdicts``), so the rollup runs once, inside that write, and its
+    bytes land once. ``n_rows`` is None then."""
     from concurrent.futures import ThreadPoolExecutor
 
     from pyspark.sql import Observation
 
     from np_data_validation_spark.operators import skew as SK
+    from np_data_validation_spark.session import submit_inheriting
 
     def write_read(df: DataFrame, name: str) -> DataFrame:
         # read back with the writer's schema: a legitimately EMPTY output
@@ -593,22 +602,26 @@ def validate_onepass(
         # independent given the written s1 — submit both writes concurrently
         # (Spark schedules concurrent jobs from separate threads), hiding one
         # job's latency behind the other's.
-        ids_f = pool.submit(write_read, identity_rows(s1), "identities")
-        probe_f = pool.submit(write_read, probed, "pairs_probe")
+        ids_f = submit_inheriting(pool, spark, write_read, identity_rows(s1), "identities")
+        probe_f = submit_inheriting(pool, spark, write_read, probed, "pairs_probe")
         if salt_buckets == "auto":
             kw = {}
             if skew_ratio is not None:
                 kw["ratio"] = skew_ratio
             if skew_min_hot_rows is not None:
                 kw["min_hot_rows"] = skew_min_hot_rows
-            skew_f = pool.submit(SK.detect_hot_keys, s1, ("doc_id", "source"), **kw)
+            skew_f = submit_inheriting(
+                pool, spark, SK.detect_hot_keys, s1, ("doc_id", "source"), **kw
+            )
             # The rollup aggregates the MERGED table (stage-1 hits + probe
             # output), but stage-1 detection can't see a hot key CREATED by
             # probe fan-out (one missed identity content-matching many
             # manifest rows). Chain a second detection over the written
             # probe table — tiny relative to s1, so the extra job is cheap.
-            probe_skew_f = pool.submit(
-                lambda: SK.detect_hot_keys(probe_f.result(), ("doc_id", "source"), **kw)
+            probe_skew_f = submit_inheriting(
+                pool,
+                spark,
+                lambda: SK.detect_hot_keys(probe_f.result(), ("doc_id", "source"), **kw),
             )
         ids = ids_f.result()
         merged = merged_pairs(s1, probe_f.result())
@@ -621,50 +634,37 @@ def validate_onepass(
     # count job it replaces is pure driver-serial fixed cost (scale-neutral
     # work hurts high-parallelism efficiency twice as hard)
     robs = Observation("onepass_rolled")
-    rolled_obs = rollup_pairs(merged, salt_buckets=salt_buckets).observe(
+    rolled = rollup_pairs(merged, salt_buckets=salt_buckets).observe(
         robs, F.count(F.lit(1)).alias("n_rows")
     )
     violations_df = all_violations(merged, ids)
     stats_df = stats_from_identities(ids)
+    # r9 (guide §2.6, overlap independent jobs): the violations and stats
+    # aggregations are independent of the rolled table given the written
+    # s1/probe/identities files, so a caller that needs their COUNTS anyway
+    # (the full constraint pass — benchlib's production job) gets them
+    # concurrently with the rolled write instead of serially after it
+    # (measured ~2 s of the 8M-row pass). Default off: API consumers that
+    # never count violations (e.g. a stream sink writing them) should not
+    # pay the two extra jobs.
+    jobs = {}
+    if write_rolled:
+        jobs["rolled"] = (write_read, rolled, "rolled")
     if derive_counts:
-        # r9 (guide §2.6, overlap independent jobs): the violations and
-        # stats aggregations are independent of the rolled table given the
-        # written s1/probe/identities files, so a caller that needs their
-        # COUNTS anyway (the full constraint pass — benchlib's production
-        # job) can run them concurrently with the rolled write instead of
-        # serially after it (measured ~2 s of the 8M-row pass). Default
-        # off: API consumers that never count violations (e.g. a stream
-        # sink writing them) should not pay the two extra jobs.
-        dpool = ThreadPoolExecutor(max_workers=3)
-        try:
-            rolled_f = dpool.submit(write_read, rolled_obs, "rolled")
-            viol_f = dpool.submit(violations_df.count)
-            stats_f = dpool.submit(stats_df.count)
-            rolled = rolled_f.result()
-            n_violations = viol_f.result()
-            n_stats_rows = stats_f.result()
-        finally:
-            dpool.shutdown(wait=True)
-        return OnepassResult(
-            rolled=rolled.select(*ROLLED_PUBLIC_COLS),
-            violations=violations_df,
-            stats=stats_df,
-            n_rows=int(robs.get["n_rows"] or 0),
-            n_missing=n_miss,
-            salt_buckets_used=salt_buckets,
-            probe_salted=probe_salted,
-            ids=ids,
-            n_violations=n_violations,
-            n_stats_rows=n_stats_rows,
-        )
-    rolled = write_read(rolled_obs, "rolled")
+        jobs["n_violations"] = (violations_df.count,)
+        jobs["n_stats_rows"] = (stats_df.count,)
+    with ThreadPoolExecutor(max_workers=3) as dpool:
+        futs = {k: submit_inheriting(dpool, spark, *job) for k, job in jobs.items()}
+        done = {k: f.result() for k, f in futs.items()}
     return OnepassResult(
-        rolled=rolled.select(*ROLLED_PUBLIC_COLS),
+        rolled=done.get("rolled", rolled).select(*ROLLED_PUBLIC_COLS),
         violations=violations_df,
         stats=stats_df,
-        n_rows=int(robs.get["n_rows"] or 0),
+        n_rows=int(robs.get["n_rows"] or 0) if write_rolled else None,
         n_missing=n_miss,
         salt_buckets_used=salt_buckets,
         probe_salted=probe_salted,
         ids=ids,
+        n_violations=done.get("n_violations"),
+        n_stats_rows=done.get("n_stats_rows"),
     )

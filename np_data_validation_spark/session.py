@@ -119,3 +119,15 @@ def _ship_package(spark: SparkSession) -> None:
                     zf.write(full, rel)
     spark.sparkContext.addPyFile(zip_path)
     setattr(spark.sparkContext, marker, True)
+
+
+def submit_inheriting(pool, spark: SparkSession, fn, *args, **kwargs):
+    """``pool.submit(fn, ...)`` with the calling thread's Spark local
+    properties (job group, scheduler pool, job tags) applied in the worker.
+    They are per thread, so a pool worker would otherwise submit its jobs
+    without what the caller set. Each submission gets its own copy: threads
+    must not share one Properties object, since Spark keeps the running SQL
+    execution id in it."""
+    from pyspark.util import inheritable_thread_target
+
+    return pool.submit(inheritable_thread_target(spark)(fn), *args, **kwargs)

@@ -10,7 +10,8 @@ Delivery semantics: Spark's streaming checkpoint gives foreachBatch
 AT-LEAST-ONCE invocation — a micro-batch whose sink write succeeded but
 whose offset commit crashed is re-invoked with the SAME batch_id. The sink
 below is therefore made idempotent by partitioning output on batch_id and
-using dynamic partition overwrite: a replayed batch overwrites its own
+using dynamic partition overwrite (a per-write option; the caller's
+session conf is left as it was): a replayed batch overwrites its own
 partition instead of appending duplicates, yielding effective exactly-once
 per micro-batch file set. The one-pass plan writes its scratch pair table
 under a batch_id-scoped dir that is DELETED once the batch's sink writes
@@ -60,13 +61,17 @@ def validate_stream(
     def process(batch_df: DataFrame, batch_id: int) -> None:
         if batch_df.isEmpty():
             return
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
         work = os.path.join(out_dir, "_work", f"batch={batch_id}")
-        res = validate_onepass(spark, batch_df, manifest, work, hash_method=hash_method)
+        # the rollup comes back unwritten: the verdicts sink write is its
+        # one write
+        res = validate_onepass(
+            spark, batch_df, manifest, work, hash_method=hash_method, write_rolled=False
+        )
         for df, name in ((res.rolled, "verdicts"), (res.violations, "violations")):
             (
                 df.withColumn("_batch_id", F.lit(batch_id))
                 .write.mode("overwrite")
+                .option("partitionOverwriteMode", "dynamic")
                 .partitionBy("_batch_id")
                 .parquet(os.path.join(out_dir, name))
             )
