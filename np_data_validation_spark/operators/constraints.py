@@ -1,84 +1,46 @@
-"""Constraint checks: uniqueness, referential integrity, consistency, schema.
+"""Whole-manifest constraint checks: orphaned entries and consistency.
 
-Each returns violation rows in the ``schema.VIOLATIONS`` shape so the engine
-can union them with the verdict-derived violations and append once.
+Both return violation rows in the ``schema.VIOLATIONS`` shape; they are
+global (they don't partition by snapshot source), so ``plans.engine.
+manifest_audit`` runs them once per validation run. The batch-scoped
+checks — uniqueness and the schema invariants — are built once, in
+``plans.onepass``, from the identity table of the validation pass.
 
 Reference anchors:
-* uniqueness      — dedup-on-insert skip (a SELF/SELF_NO_CHECKSUM match
-                    blocks a second insert), /root/reference/
-                    data_validation.py:728-734, :798-804
-* referential     — "no hits in db" -> probe backups -> report missing,
-                    /root/reference/data_validation.py:1244-1266,
-                    strategies.py:85-86
+* referential     — "entry in DB whose file no longer exists", probed via
+                    the accessible flag, reference data_validation.py:453,
+                    :1286
 * consistency     — all-same-checksum check within a match group,
                     /root/reference/data_validation.py:1218-1222
-* schema invariant— checksum format guard on set (valid_crc32_checksum,
-                    /root/reference/data_validation.py:211-216, :507-513),
-                    re-expressed as n_tok == size(tokens) (input_hint's
-                    token-array-equality surrogate) + id null checks.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
 def _as_violation(df: DataFrame, name: str, detail_cols: list[str]) -> DataFrame:
-    present = [c for c in detail_cols if c in df.columns]
     return df.select(
         "doc_id",
         "source",
         F.lit(name).alias("violation"),
-        F.to_json(F.struct(*[F.col(c) for c in present])).alias("detail"),
+        F.to_json(F.struct(*[F.col(c) for c in detail_cols])).alias("detail"),
     )
 
 
-def uniqueness_violations(snapshot: DataFrame) -> DataFrame:
-    """All-but-first rows sharing a (doc_id, source) identity.
+def referential_violations(snapshot: DataFrame, manifest: DataFrame) -> DataFrame:
+    """manifest ∖ snapshot -> MISSING_IN_SNAPSHOT (orphaned manifest entry).
 
-    Window ranking (SURVEY.md §2.5 W-dup): one shuffle on the same keys the
-    big join uses. Deterministic tiebreak on (tok_hash, n_tok) — no
-    wall-clock — so resumed runs flag identical rows.
+    The other direction — a snapshot row with no manifest counterpart — is
+    the verdict MISSING_COUNTERPART, reported per row by the validation
+    pass after the content probe had its chance to rescue it.
     """
-    order_cols = [
-        F.col(c).asc_nulls_last()
-        for c in ("tok_hash", "n_tok")
-        if c in snapshot.columns
-    ]
-    w = Window.partitionBy("doc_id", "source").orderBy(*order_cols)
     return _as_violation(
-        snapshot.withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") > 1)
-        .withColumn("dup_rank", F.col("_rn")),
-        "DUPLICATE_DOC_ID",
-        ["dup_rank", "n_tok", "tok_hash"],
-    )
-
-
-def referential_violations(
-    snapshot: DataFrame, manifest: DataFrame, both_directions: bool = True
-) -> DataFrame:
-    """Anti-joins in both directions.
-
-    snapshot ∖ manifest  -> MISSING_IN_MANIFEST (subject has no counterpart)
-    manifest ∖ snapshot  -> MISSING_IN_SNAPSHOT (orphaned manifest entry —
-    the reference's "entry in DB whose file no longer exists" case, probed
-    via the accessible flag, /root/reference/data_validation.py:453,:1286).
-    """
-    missing = _as_violation(
-        snapshot.join(manifest.select("doc_id"), "doc_id", "left_anti"),
-        "MISSING_IN_MANIFEST",
-        ["n_tok", "tok_hash"],
-    )
-    if not both_directions:
-        return missing
-    orphaned = _as_violation(
         manifest.join(snapshot.select("doc_id"), "doc_id", "left_anti"),
         "MISSING_IN_SNAPSHOT",
         ["n_tok", "tok_hash"],
     )
-    return missing.unionByName(orphaned)
 
 
 def consistency_violations(manifest: DataFrame) -> DataFrame:
@@ -98,66 +60,3 @@ def consistency_violations(manifest: DataFrame) -> DataFrame:
         .filter(F.col("n_hashes") > 1)
     )
     return _as_violation(bad, "INCONSISTENT_GROUP", ["n_hashes"])
-
-
-def schema_violations(snapshot: DataFrame) -> DataFrame:
-    """Row-level schema invariants on the snapshot.
-
-    * N_TOK_MISMATCH — ``n_tok != size(tokens)`` (the cheap surrogate must
-      agree with the payload, reference size semantics :475-482)
-    * NULL_N_TOK / NULL_DOC_ID — required-field checks (reference: "size and
-      path fields are required entries", :549-550)
-    """
-    checks = snapshot.select(
-        "doc_id",
-        "source",
-        "n_tok",
-        F.size("tokens").alias("actual_len"),
-        F.col("tokens").isNull().alias("_tokens_null"),
-    )
-    mismatch = _as_violation(
-        checks.filter(
-            ~F.col("_tokens_null") & (F.col("n_tok") != F.col("actual_len"))
-        ),
-        "N_TOK_MISMATCH",
-        ["n_tok", "actual_len"],
-    )
-    null_ntok = _as_violation(
-        checks.filter(F.col("n_tok").isNull()), "NULL_N_TOK", ["actual_len"]
-    )
-    null_docid = _as_violation(
-        checks.filter(F.col("doc_id").isNull()), "NULL_DOC_ID", ["n_tok", "actual_len"]
-    )
-    return mismatch.unionByName(null_ntok).unionByName(null_docid)
-
-
-def schema_violations_slim(
-    s1: DataFrame, actual_col: str = "n_tok_actual"
-) -> DataFrame:
-    """Schema invariants computed from a pair table that carried the actual
-    payload length through stage 1 (plans.oracle.materialize_pairs) — avoids
-    rescanning the token payload."""
-    mismatch = _as_violation(
-        s1.filter(
-            F.col(actual_col).isNotNull() & (F.col("n_tok") != F.col(actual_col))
-        ).withColumnRenamed(actual_col, "actual_len"),
-        "N_TOK_MISMATCH",
-        ["n_tok", "actual_len"],
-    )
-    null_ntok = _as_violation(
-        s1.filter(F.col("n_tok").isNull()), "NULL_N_TOK", [actual_col]
-    )
-    # the pair table has one row per (subject x manifest hit): collapse the
-    # join multiplicity so each offending subject is flagged once
-    return mismatch.unionByName(null_ntok).dropDuplicates()
-
-
-def all_violations(snapshot: DataFrame, manifest: DataFrame) -> DataFrame:
-    """Union of the pure-constraint violations (verdict-derived violations
-    come from operators.verdicts.extract_violations)."""
-    return (
-        uniqueness_violations(snapshot)
-        .unionByName(referential_violations(snapshot, manifest))
-        .unionByName(consistency_violations(manifest))
-        .unionByName(schema_violations(snapshot))
-    )

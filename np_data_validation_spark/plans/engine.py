@@ -230,9 +230,7 @@ def manifest_audit(snapshot: DataFrame, manifest: DataFrame) -> DataFrame:
     consistency (conflicting hashes per doc_id) and orphaned manifest
     entries. Run once per validation run, not per batch."""
     return C.consistency_violations(manifest).unionByName(
-        C.referential_violations(snapshot, manifest).filter(
-            F.col("violation") == "MISSING_IN_SNAPSHOT"
-        )
+        C.referential_violations(snapshot, manifest)
     )
 
 
@@ -332,7 +330,6 @@ def run_validation(
     out_dir: str,
     resume: bool = True,
     commit_batch: int | None = None,
-    hash_method: str = "pandas_udf",
     content_aware: bool = False,
     keep_audit: int | None = None,
 ) -> RunResult:
@@ -408,7 +405,7 @@ def run_validation(
                 and str(lin.get("input_fingerprint", "")).count(":") == 3
                 and str(lin["input_fingerprint"]).rsplit(":", 1)[0] == fps[p]
             ]
-            gate_fps = CP.content_fingerprints(snapshot, cand, hash_method) if cand else {}
+            gate_fps = CP.content_fingerprints(snapshot, cand) if cand else {}
         done = CP.select_done(lineage, gate_fps, code_version=CODE_VERSION)
     pending = [p for p in all_parts if p not in done]
 
@@ -448,7 +445,6 @@ def run_validation(
             res = validate_onepass(
                 spark, snap_b, manifest,
                 os.path.join(out_dir, "_work", f"run={run_id}", f"batch={bi}"),
-                hash_method=hash_method,
                 write_rolled=False,
             )
             # 1) results first (idempotent per-partition replacement:

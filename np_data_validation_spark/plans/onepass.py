@@ -6,7 +6,7 @@ ONE pass over the payload and derives everything else from a slim written
 pair table:
 
     scan snapshot (tokens read once)
-      -> pandas-UDF tok_hash (pre-shuffle, scales with cores)
+      -> Arrow-UDF tok_hash (pre-shuffle, scales with cores)
       -> Exchange(doc_id)                        [the only payload shuffle]
       -> pre-aggregate on full row identity (doc_id, source, n_tok,
          tok_hash, n_tok_actual) -> s_mult       [no extra exchange:
@@ -26,10 +26,13 @@ reads the written files; nothing touches the payload again, and uniqueness
 violations (per-duplicate dup_rank rows) are reconstructed exactly from the
 identity multiplicities.
 
-Semantics are row-for-row identical to the two-stage oracle plan
-(plans.oracle.validate_batch, test-support only)
-— tests/test_onepass.py asserts rolled, violations and stats equality; the
-reference anchors are unchanged: verdict tree
+This module is the one Spark implementation of the validation rules
+(verdict pairs, rollup, uniqueness / schema violations, stats). Its
+independent second opinion is the DuckDB formulation of the same pass,
+``queries.onepass_sql``, which works on raw rows (no identity
+pre-aggregation) and shares no code with ``verdicts.classify_expr``;
+tests/test_onepass*.py assert rolled, violations and stats equality
+against it. Reference anchors: verdict tree
 /root/reference/data_validation.py:547-628, content-probe fallback
 :1256-1266, uniqueness dedup-on-insert :728-734.
 """
@@ -58,7 +61,7 @@ PAIR_COLS = IDENTITY_COLS + ["s_mult", "m_source", "m_n_tok", "m_tok_hash", "ver
 class OnepassResult:
     rolled: DataFrame      # verdict rollup (engine verdict schema)
     violations: DataFrame  # schema.VIOLATIONS shape
-    stats: DataFrame       # operators.stats.partition_stats shape
+    stats: DataFrame       # per-source + global stats (stats_from_identities)
     n_rows: int | None     # validated (doc_id, source) subjects (None with
     #                        write_rolled=False: the caller's write runs the rollup)
     n_missing: int         # subjects probed by content
@@ -77,7 +80,7 @@ class OnepassResult:
 # ---------------------------------------------------------------------------
 
 
-def hashed_identity(snapshot: DataFrame, hash_method: str = "pandas_udf") -> DataFrame:
+def hashed_identity(snapshot: DataFrame) -> DataFrame:
     """Slim hashed snapshot pre-aggregated on full row identity.
 
     The single Exchange(doc_id) here is the only shuffle the payload side
@@ -93,7 +96,7 @@ def hashed_identity(snapshot: DataFrame, hash_method: str = "pandas_udf") -> Dat
         F.when(F.col("tokens").isNotNull(), F.size("tokens")).alias("n_tok_actual"),
         "tokens",
     )
-    slim = with_tok_hash(slim, method=hash_method).drop("tokens")
+    slim = with_tok_hash(slim).drop("tokens")
     return (
         slim.repartition("doc_id")
         .groupBy(*IDENTITY_COLS)
@@ -116,13 +119,11 @@ def _manifest_m(manifest: DataFrame) -> DataFrame:
     )
 
 
-def pairs_stage1(
-    snapshot: DataFrame, manifest: DataFrame, hash_method: str = "pandas_udf"
-) -> DataFrame:
+def pairs_stage1(snapshot: DataFrame, manifest: DataFrame) -> DataFrame:
     """The one wide plan: hash -> identity pre-agg -> manifest join ->
     verdict CASE. Exactly two Exchanges total (one per side); shuffled-hash
     join (no sorts), manifest as build side."""
-    pre = hashed_identity(snapshot, hash_method)
+    pre = hashed_identity(snapshot)
     m = _manifest_m(manifest)
     pairs = pre.join(m.hint("shuffle_hash"), pre["doc_id"] == m["m_doc_id"], "left")
     return pairs.withColumn("verdict_code", V.classify_expr()).select(*PAIR_COLS)
@@ -188,9 +189,9 @@ def probe_pairs_from(
         # join-then-dedup-pairs yield the SAME (identity, m_identity) row
         # set — the exchange now carries only hash-matched pairs (a miss
         # fraction) instead of every manifest row. NOTE: this rewrite is
-        # only valid over an identity-unique missed side; the generic
-        # verdicts.probe_pairs keeps dedup-before-join because its missed
-        # side is raw snapshot rows (duplicates must each keep a row).
+        # only valid over an identity-unique missed side; over raw
+        # snapshot rows (duplicates must each keep a row) the manifest
+        # would have to be deduped before the join.
         m_raw = manifest.select(
             F.col("doc_id").alias("m_doc_id"),
             F.col("source").alias("m_source"),
@@ -251,8 +252,8 @@ def probe_pairs_from(
     # NULL-SAFE anti-join on the full identity: each distinct identity stays
     # MISSING unless ITS OWN content matched (per-identity probe semantics —
     # a subject holding two identities where only one content-matches keeps
-    # a MISSING row for the other, exactly like validate_batch's left-join
-    # probe). Plain column-list equality would be null-unsafe: a missed row
+    # a MISSING row for the other, as a per-row left-join probe would).
+    # Plain column-list equality would be null-unsafe: a missed row
     # with a null identity column (e.g. null n_tok) that content-matched
     # would reappear in `still` and double-report (found pair + spurious
     # MISSING row).
@@ -296,10 +297,23 @@ def merged_pairs(s1: DataFrame, probed: DataFrame) -> DataFrame:
 
 
 def rollup_pairs(pairs: DataFrame, salt_buckets: int | None = None) -> DataFrame:
-    """Per-subject rollup — operators.verdicts.rollup_verdicts weighted by
-    the identity multiplicity (sum(s_mult) == raw pair-row count).
-    ``salt_buckets``: two-level skew-spread aggregation, see
-    verdicts.rollup_verdicts (all aggregates here are algebraic)."""
+    """Per-subject rollup over its pair verdicts, weighted by the identity
+    multiplicity (sum(s_mult) == raw pair-row count).
+
+    ``final_verdict_code`` = max code — the threshold semantics make max
+    meaningful (valid backups 21+ dominate, invalid band 10-13 dominates
+    benign 0-7), matching the reference's "any hit >= VALID_COPY..."
+    action gate (:1329) and "any invalid copy vetoes" rule (reference
+    strategies.py:135-138). ``row_status``: fail on any invalid or missing
+    pair, else pass on any valid pair or a one-sided missing checksum,
+    else unknown.
+
+    ``salt_buckets``: explicit skew handling for pathological hot keys (a
+    doc_id with millions of pair rows funnels through one reducer, the
+    reference's one-big-session pathology, data_validation.py:1449-1455).
+    With salting, partials run on (key, salt) over ``salt_buckets``
+    reducers, then merge exactly on the key (max-of-max / sum-of-sum — all
+    aggregates algebraic)."""
     code = F.col("verdict_code")
     valid = (code >= V.VALID_MIN) | (code == V.SELF)
     invalid = code.between(V.UNSYNCED_DATA, V.UNSYNCED_OR_CORRUPT_DATA)
@@ -368,8 +382,10 @@ def identity_rows(s1: DataFrame) -> DataFrame:
 
 
 def verdict_violations(pairs: DataFrame) -> DataFrame:
-    """operators.verdicts.extract_violations over weighted pairs: one
-    violation row per RAW pair row (s_mult replication)."""
+    """Violation rows (schema.VIOLATIONS) from classified pairs — the
+    reference's report()-then-act path (data_validation.py:1403-1447) as a
+    table: one row per RAW pair row (s_mult replication)
+    whose verdict maps to a class in ``verdicts.VIOLATION_CLASS``."""
     code = F.col("verdict_code")
     cls = None
     for verdict, name in V.VIOLATION_CLASS.items():
@@ -398,12 +414,14 @@ def verdict_violations(pairs: DataFrame) -> DataFrame:
 
 
 def uniqueness_violations_from_identities(ids: DataFrame) -> DataFrame:
-    """operators.constraints.uniqueness_violations reconstructed exactly:
-    per (doc_id, source), identities ordered by (tok_hash, n_tok)
-    nulls-last occupy rank ranges [cum+1, cum+s_mult]; every rank > 1 is a
-    DUPLICATE_DOC_ID row. ``tot_mult`` was precomputed at identity-write
-    time, so selecting the offending groups is a plain filter and only the
-    (rare) offenders reach the ranking window."""
+    """Uniqueness: all-but-first raw rows sharing a (doc_id, source)
+    identity (the reference's dedup-on-insert skip, data_validation.py:
+    728-734). Rows rank by (tok_hash, n_tok) nulls-last
+    — no wall-clock, so resumed runs flag identical rows. Per (doc_id,
+    source), identities occupy rank ranges [cum+1, cum+s_mult]; every
+    rank > 1 is a DUPLICATE_DOC_ID row. ``tot_mult`` was precomputed at
+    identity-write time, so selecting the offending groups is a plain
+    filter and only the (rare) offenders reach the ranking window."""
     bad = ids.filter(F.col("tot_mult") > 1)
     w = Window.partitionBy("doc_id", "source").orderBy(
         F.col("tok_hash").asc_nulls_last(), F.col("n_tok").asc_nulls_last()
@@ -439,8 +457,13 @@ def uniqueness_violations_from_identities(ids: DataFrame) -> DataFrame:
 
 
 def schema_violations_from_identities(ids: DataFrame) -> DataFrame:
-    """operators.constraints.schema_violations semantics (one row per raw
-    snapshot row) from identity rows."""
+    """Row-level schema invariants, one row per raw snapshot row:
+
+    * N_TOK_MISMATCH — ``n_tok != size(tokens)`` for non-null tokens (the
+      cheap surrogate must agree with the payload, reference size
+      semantics :475-482)
+    * NULL_N_TOK / NULL_DOC_ID — required-field checks (reference: "size and
+      path fields are required entries", :549-550)"""
     rep = F.explode(F.sequence(F.lit(1).cast("long"), F.col("s_mult")))
     mismatch = (
         ids.filter(
@@ -484,8 +507,9 @@ def schema_violations_from_identities(ids: DataFrame) -> DataFrame:
 
 
 def all_violations(merged: DataFrame, ids: DataFrame) -> DataFrame:
-    """Batch-scoped violations, row-for-row equal to validate_batch's
-    union (verdict-derived + uniqueness + schema)."""
+    """Batch-scoped violations: verdict-derived + uniqueness + schema.
+    Manifest-side checks (consistency, orphans) are global — see
+    plans.engine.manifest_audit."""
     return (
         verdict_violations(merged)
         .unionByName(uniqueness_violations_from_identities(ids))
@@ -494,9 +518,12 @@ def all_violations(merged: DataFrame, ids: DataFrame) -> DataFrame:
 
 
 def stats_from_identities(ids: DataFrame, group_col: str = "source") -> DataFrame:
-    """operators.stats.partition_stats reproduced from identity rows —
-    multiplicity-weighted so the numbers equal a raw-snapshot pass, with no
-    token-payload rescan (approx-distinct is duplicate-insensitive)."""
+    """One stats row per partition PLUS a global row (rollup grouping
+    sets; the global row has source = NULL and is_global = true): row
+    count, n_tok min/max/avg/sum, n_tok and tokens null rates, approx
+    distinct doc_id. Multiplicity-weighted so the numbers equal a
+    raw-snapshot pass, with no token-payload rescan (approx-distinct is
+    duplicate-insensitive)."""
     mult = F.col("s_mult")
     ntok_notnull = F.when(F.col("n_tok").isNotNull(), mult).otherwise(F.lit(0))
     return ids.rollup(group_col).agg(
@@ -531,7 +558,6 @@ def validate_onepass(
     snapshot: DataFrame,
     manifest: DataFrame,
     work_dir: str,
-    hash_method: str = "pandas_udf",
     salt_buckets: int | str | None = "auto",
     skew_ratio: float | None = None,
     skew_min_hot_rows: int | None = None,
@@ -587,7 +613,7 @@ def validate_onepass(
         )
         # the miss count rides the stage-1 write as an observation (no extra job)
         obs = Observation("onepass_stage1")
-        s1_obs = pairs_stage1(snapshot, manifest, hash_method).observe(
+        s1_obs = pairs_stage1(snapshot, manifest).observe(
             obs,
             F.sum(
                 F.when(F.col("verdict_code") == V.MISSING_COUNTERPART, 1).otherwise(0)

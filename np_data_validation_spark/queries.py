@@ -16,6 +16,7 @@ end-to-end against DuckDB.
 
 from __future__ import annotations
 
+import os
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession, Window
@@ -31,25 +32,28 @@ from np_data_validation_spark.operators import verdicts as V
 # ---------------------------------------------------------------------------
 
 
-#: (sf_dir, table) -> inferred StructType. Parquet footer/schema inference
-#: is driver-serial fixed cost paid at DataFrame CONSTRUCTION — measured
-#: ~75 ms per table read, ~0.3 s for a 5-table query like j10 (r9). The
-#: schema is metadata, inferred once per input directory from the actual
-#: files and reused for every later read of the same table — never a
-#: hardcoded guess, so a driver-generated scale factor with a different
-#: schema still works.
-_SCHEMA_MEMO: dict[tuple[str, str], object] = {}
+#: table path -> (mtime_ns, inferred StructType). Parquet footer/schema
+#: inference is driver-serial fixed cost paid at DataFrame CONSTRUCTION —
+#: measured ~75 ms per table read, ~0.3 s for a 5-table query like j10
+#: (r9). The schema is metadata, inferred from the actual files and reused
+#: for later reads of the same table until its mtime changes, so a table
+#: rewritten with a different schema in the same process is re-inferred.
+#: Paths os.stat cannot see (object stores) are inferred on every read.
+_SCHEMA_MEMO: dict[str, tuple[int, object]] = {}
 
 
 def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    key = (sf_dir, name)
     path = f"{sf_dir}/{name}.parquet"
-    schema = _SCHEMA_MEMO.get(key)
-    if schema is None:
+    try:
+        mtime = os.stat(path).st_mtime_ns
+    except OSError:
+        return spark.read.parquet(path)
+    memo = _SCHEMA_MEMO.get(path)
+    if memo is None or memo[0] != mtime:
         df = spark.read.parquet(path)
-        _SCHEMA_MEMO[key] = df.schema
+        _SCHEMA_MEMO[path] = (mtime, df.schema)
         return df
-    return spark.read.schema(schema).parquet(path)
+    return spark.read.schema(memo[1]).parquet(path)
 
 
 def _i6(col):  # float -> stable integer (1e-6 grain)
@@ -159,6 +163,124 @@ j AS (
 )
 SELECT j.*, {VERDICT_CASE_SQL} AS verdict_code FROM j
 """
+
+
+def onepass_sql(snapshot: str = "snapshot", manifest: str = "manifest") -> dict[str, str]:
+    """DuckDB formulation of the one-pass validation (plans.onepass), the
+    independent second opinion its equivalence tests compare against.
+
+    ``snapshot`` / ``manifest`` are relations (table names or parenthesized
+    subqueries): the snapshot with (doc_id, source, n_tok, tok_hash,
+    n_tok_actual) — ``n_tok_actual`` the token-array length, NULL for NULL
+    tokens — and the manifest with (doc_id, source, n_tok, tok_hash).
+    Returns one query per output: ``pairs`` (merged classified pairs),
+    ``rolled``, ``violations`` and ``stats``, with the Spark outputs'
+    columns.
+
+    It works on raw rows, not identity multiplicities, and shares no code
+    with ``verdicts.classify_expr``: the CASE is VERDICT_CASE_SQL and the
+    codes are literals.
+
+    * the manifest is deduplicated on full identity; stage 1 LEFT JOINs it
+      on doc_id (a NULL doc_id never joins);
+    * a row with no doc_id counterpart (code 14) is probed by content: it
+      pairs with every manifest row of its tok_hash, and stays missing iff
+      its tok_hash is NULL or no manifest row carries it;
+    * the rollup takes per (doc_id, source) the max code, valid (5 or >=21),
+      invalid (11-13) and missing (14) flags and the pair count;
+    * violations: one per pair coded 11-14; DUPLICATE_DOC_ID for every row
+      after the first of a (doc_id, source) group ordered by tok_hash then
+      n_tok, NULLs last; N_TOK_MISMATCH where the tokens are not NULL and
+      their length differs from n_tok (NULL n_tok is not a mismatch);
+      NULL_N_TOK; NULL_DOC_ID. ``detail`` is JSON text that, unlike Spark's
+      to_json, keeps NULL-valued keys;
+    * stats: per source plus a global row (``is_global``);
+      ``doc_id_approx_distinct`` is the exact distinct count here.
+    """
+    names = " ".join(f"WHEN {c} THEN '{n}'" for c, n in V.VERDICT_NAMES.items())
+    ctes = f"""WITH
+s AS (SELECT doc_id, source, n_tok, tok_hash, n_tok_actual FROM {snapshot}),
+m AS (
+  SELECT DISTINCT doc_id AS m_doc_id, source AS m_source, n_tok AS m_n_tok,
+         tok_hash AS m_tok_hash
+  FROM {manifest}
+),
+j AS (
+  SELECT s.doc_id, s.source, s.n_tok, s.tok_hash,
+         m.m_doc_id, m.m_source, m.m_n_tok, m.m_tok_hash
+  FROM s LEFT JOIN m ON s.doc_id = m.m_doc_id
+),
+p1 AS (SELECT j.*, {VERDICT_CASE_SQL} AS verdict_code FROM j),
+miss AS (SELECT doc_id, source, n_tok, tok_hash FROM p1 WHERE verdict_code = 14),
+pf AS (
+  SELECT miss.*, m.m_doc_id, m.m_source, m.m_n_tok, m.m_tok_hash
+  FROM miss JOIN m ON miss.tok_hash = m.m_tok_hash
+),
+pairs AS (
+  SELECT * FROM p1 WHERE verdict_code != 14
+  UNION ALL SELECT pf.*, {VERDICT_CASE_SQL} AS verdict_code FROM pf
+  UNION ALL
+  SELECT doc_id, source, n_tok, tok_hash, NULL, NULL, NULL, NULL, 14 FROM miss
+  WHERE tok_hash IS NULL
+     OR NOT EXISTS (SELECT 1 FROM m WHERE m.m_tok_hash = miss.tok_hash)
+),
+rolled AS (
+  SELECT doc_id, source,
+         MAX(verdict_code) AS final_verdict_code,
+         bool_or(verdict_code >= 21 OR verdict_code = 5) AS has_valid,
+         bool_or(verdict_code BETWEEN 11 AND 13) AS has_invalid,
+         bool_or(verdict_code = 14) AS is_missing,
+         CAST(COUNT(*) AS BIGINT) AS n_pairs
+  FROM pairs GROUP BY doc_id, source
+)
+"""
+    return {
+        "pairs": ctes + "SELECT * FROM pairs",
+        "rolled": ctes
+        + """SELECT *,
+       CASE WHEN has_invalid OR is_missing THEN 'fail'
+            WHEN has_valid OR final_verdict_code IN (6, 7) THEN 'pass'
+            ELSE 'unknown' END AS row_status
+FROM rolled""",
+        "violations": ctes
+        + f"""SELECT doc_id, source,
+       CASE verdict_code WHEN 11 THEN 'SIZE_MISMATCH' WHEN 12 THEN 'STALE_CHECKSUM'
+            WHEN 13 THEN 'CHECKSUM_MISMATCH' ELSE 'MISSING_COUNTERPART' END AS violation,
+       CAST(json_object('verdict', CASE verdict_code {names} END, 'n_tok', n_tok,
+            'm_n_tok', m_n_tok, 'tok_hash', tok_hash, 'm_tok_hash', m_tok_hash,
+            'm_source', m_source) AS VARCHAR) AS detail
+FROM pairs WHERE verdict_code BETWEEN 11 AND 14
+UNION ALL
+SELECT doc_id, source, 'DUPLICATE_DOC_ID',
+       CAST(json_object('dup_rank', rn, 'n_tok', n_tok, 'tok_hash', tok_hash) AS VARCHAR)
+FROM (
+  SELECT *, row_number() OVER (PARTITION BY doc_id, source
+                               ORDER BY tok_hash NULLS LAST, n_tok NULLS LAST) AS rn
+  FROM s
+) WHERE rn > 1
+UNION ALL
+SELECT doc_id, source, 'N_TOK_MISMATCH',
+       CAST(json_object('n_tok', n_tok, 'actual_len', n_tok_actual) AS VARCHAR)
+FROM s WHERE n_tok_actual IS NOT NULL AND n_tok != n_tok_actual
+UNION ALL
+SELECT doc_id, source, 'NULL_N_TOK', CAST(json_object('actual_len', n_tok_actual) AS VARCHAR)
+FROM s WHERE n_tok IS NULL
+UNION ALL
+SELECT doc_id, source, 'NULL_DOC_ID',
+       CAST(json_object('n_tok', n_tok, 'actual_len', n_tok_actual) AS VARCHAR)
+FROM s WHERE doc_id IS NULL""",
+        "stats": ctes
+        + """SELECT source,
+       CAST(COUNT(*) AS BIGINT) AS n_rows,
+       MIN(n_tok) AS n_tok_min, MAX(n_tok) AS n_tok_max,
+       CAST(SUM(n_tok) AS DOUBLE) / COUNT(n_tok) AS n_tok_avg,
+       CAST(SUM(n_tok) AS BIGINT) AS n_tok_sum,
+       CAST(COUNT(*) - COUNT(n_tok) AS DOUBLE) / COUNT(*) AS n_tok_null_rate,
+       CAST(COUNT(*) - COUNT(n_tok_actual) AS DOUBLE) / COUNT(*) AS tokens_null_rate,
+       COUNT(DISTINCT doc_id) AS doc_id_approx_distinct,
+       GROUPING(source) = 1 AS is_global
+FROM s GROUP BY ROLLUP (source)""",
+    }
 
 
 def _pairs_df(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1287,7 +1409,7 @@ _GOLDEN_FIXTURE = __file__.rsplit("/", 2)[0] + "/fixtures/xxh64_golden.parquet"
         FROM read_parquet('{_GOLDEN_FIXTURE}') ORDER BY case_id""",
 )
 def udf_xxhash_golden(spark, sf_dir):
-    """Value-level check of the vectorized pandas-UDF XXH64 kernel: hash the
+    """Value-level check of the vectorized Arrow-UDF XXH64 kernel: hash the
     fixture token arrays (edge lengths around every stripe/lane boundary,
     adversarial values) and compare against goldens pinned from the scalar
     public-spec implementation — the golden-checksum doctrine of the
@@ -1349,13 +1471,6 @@ def p6_conditional_hash_gate(spark, sf_dir):
 
 # --- streaming-vs-batch parity: the Structured Streaming path --------------
 
-#: The streaming oracle's CASE is literally the engine CASE with hash
-#: values replaced by a symbolic content id ``c``: token arrays are unique
-#: per vec_id in this fixture, so tok_hash equality <=> token-array
-#: equality <=> c equality (the input_hint's per-row invariant). The
-#: textual substitution also maps m_tok_hash -> m_c.
-STREAM_CASE_SQL = VERDICT_CASE_SQL.replace("tok_hash", "c")
-
 #: Deterministic fault injections over embeddings-derived sequences
 #: (id arithmetic, both engines):
 #:   %13==0 dropped from manifest      -> MISSING_COUNTERPART (probe finds
@@ -1367,65 +1482,32 @@ STREAM_CASE_SQL = VERDICT_CASE_SQL.replace("tok_hash", "c")
 #:   %11==0 manifest n_tok+3           -> size mismatch
 #:   %5 ==0 manifest source 'backup'   -> copy family
 #:   %19==0 extra 'mirror' row         -> multi-pair subject (rollup MAX)
-STREAM_ROLLUP_SQL = f"""
-WITH base AS (
+#: The oracle is the one-pass DuckDB formulation with the hash replaced by
+#: a symbolic content id aliased as tok_hash: token arrays are unique per
+#: vec_id in this fixture, so tok_hash equality <=> token-array equality
+#: <=> content-id equality (the input_hint's per-row invariant).
+_STREAM_BASE = """(
   SELECT CAST(vec_id AS BIGINT) AS id,
          CAST(vec_id AS VARCHAR) AS doc_id,
          's' || CAST(vec_id % 3 AS VARCHAR) AS source,
          len(embedding) AS n_tok
   FROM embeddings
-),
-s AS (SELECT doc_id, source, n_tok, id AS c FROM base),
-m AS (
-  SELECT CASE WHEN id % 17 = 0 THEN 'r' || doc_id ELSE doc_id END AS m_doc_id,
-         CASE WHEN id % 5 = 0 THEN 'backup' ELSE source END AS m_source,
-         n_tok + (CASE WHEN id % 11 = 0 THEN 3 ELSE 0 END) AS m_n_tok,
-         CASE WHEN id % 7 = 0 THEN -(id + 1) ELSE id END AS m_c
-  FROM base WHERE id % 13 != 0
+) base"""
+
+STREAM_ROLLUP_SQL = onepass_sql(
+    snapshot=f"(SELECT doc_id, source, n_tok, id AS tok_hash, n_tok AS n_tok_actual "
+    f"FROM {_STREAM_BASE})",
+    manifest=f"""(
+  SELECT CASE WHEN id % 17 = 0 THEN 'r' || doc_id ELSE doc_id END AS doc_id,
+         CASE WHEN id % 5 = 0 THEN 'backup' ELSE source END AS source,
+         n_tok + (CASE WHEN id % 11 = 0 THEN 3 ELSE 0 END) AS n_tok,
+         CASE WHEN id % 7 = 0 THEN -(id + 1) ELSE id END AS tok_hash
+  FROM {_STREAM_BASE} WHERE id % 13 != 0
   UNION ALL
   SELECT doc_id, 'mirror', n_tok, id
-  FROM base WHERE id % 13 != 0 AND id % 19 = 0
-),
-j AS (
-  SELECT s.doc_id, s.source, s.n_tok, s.c,
-         m.m_doc_id, m.m_source, m.m_n_tok, m.m_c
-  FROM s LEFT JOIN m ON s.doc_id = m.m_doc_id
-),
-p1 AS (SELECT j.*, {STREAM_CASE_SQL} AS verdict_code FROM j),
-miss AS (SELECT doc_id, source, n_tok, c FROM p1 WHERE verdict_code = 14),
-pf AS (
-  SELECT s.doc_id, s.source, s.n_tok, s.c,
-         m.m_doc_id, m.m_source, m.m_n_tok, m.m_c
-  FROM miss s JOIN m ON s.c = m.m_c
-),
-p2 AS (SELECT pf.*, {STREAM_CASE_SQL} AS verdict_code FROM pf),
-still AS (
-  SELECT doc_id, source, n_tok, c,
-         NULL AS m_doc_id, NULL AS m_source, NULL AS m_n_tok, NULL AS m_c,
-         14 AS verdict_code
-  FROM miss WHERE NOT EXISTS (SELECT 1 FROM m WHERE m.m_c = miss.c)
-),
-merged AS (
-  SELECT * FROM p1 WHERE verdict_code != 14
-  UNION ALL SELECT * FROM p2
-  UNION ALL SELECT * FROM still
-),
-rolled AS (
-  SELECT doc_id, source,
-         MAX(verdict_code) AS final_verdict_code,
-         bool_or(verdict_code >= 21 OR verdict_code = 5) AS has_valid,
-         bool_or(verdict_code BETWEEN 11 AND 13) AS has_invalid,
-         bool_or(verdict_code = 14) AS is_missing,
-         CAST(COUNT(*) AS BIGINT) AS n_pairs
-  FROM merged GROUP BY doc_id, source
-)
-SELECT doc_id, source, final_verdict_code, has_valid, has_invalid, is_missing,
-       n_pairs,
-       CASE WHEN has_invalid OR is_missing THEN 'fail'
-            WHEN has_valid OR final_verdict_code IN (6, 7) THEN 'pass'
-            ELSE 'unknown' END AS row_status
-FROM rolled
-"""
+  FROM {_STREAM_BASE} WHERE id % 13 != 0 AND id % 19 = 0
+)""",
+)["rolled"]
 
 
 def stream_parity_tables(spark, sf_dir) -> tuple[DataFrame, DataFrame]:
@@ -1477,11 +1559,10 @@ def streaming_verdict_rollup(spark, sf_dir):
     plans.onepass plan as batch) over a SEQUENCES table derived from
     ``embeddings`` with deterministic fault injections. The oracle mirrors
     the FULL onepass verdict semantics — stage-1 doc_id join, ordered CASE,
-    content probe of the missing band, per-identity anti-join, per-subject
-    rollup — with hash equality encoded symbolically (see STREAM_CASE_SQL).
+    content probe of the missing band, per-row still-missing rule, per-subject
+    rollup — with hash equality encoded symbolically (see STREAM_ROLLUP_SQL).
     Reference anchor: the batch-with-resume outer loop this streams,
     /root/reference/data_validation.py:1449-1464."""
-    import os
     import tempfile
 
     from np_data_validation_spark.streaming.incremental import validate_stream

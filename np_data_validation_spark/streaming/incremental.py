@@ -45,7 +45,6 @@ def validate_stream(
     landing_dir: str,
     manifest: DataFrame,
     out_dir: str,
-    hash_method: str = "pandas_udf",
     available_now: bool = True,
     max_files_per_trigger: int | None = None,
 ):
@@ -64,9 +63,7 @@ def validate_stream(
         work = os.path.join(out_dir, "_work", f"batch={batch_id}")
         # the rollup comes back unwritten: the verdicts sink write is its
         # one write
-        res = validate_onepass(
-            spark, batch_df, manifest, work, hash_method=hash_method, write_rolled=False
-        )
+        res = validate_onepass(spark, batch_df, manifest, work, write_rolled=False)
         for df, name in ((res.rolled, "verdicts"), (res.violations, "violations")):
             (
                 df.withColumn("_batch_id", F.lit(batch_id))

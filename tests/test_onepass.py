@@ -1,5 +1,5 @@
-"""Equivalence of the one-pass plan (plans.onepass) with the reference
-two-stage oracle plan (plans.oracle.validate_batch): rolled verdicts, violations
+"""Equivalence of the one-pass plan (plans.onepass) with its DuckDB
+formulation (queries.onepass_sql): rolled verdicts, violations
 (verdict-derived + uniqueness + schema) and per-partition stats must match
 row for row on the fault-injected synthetic dataset (every verdict class,
 duplicates, n_tok mismatches, null payloads present)."""
@@ -7,11 +7,16 @@ duplicates, n_tok mismatches, null payloads present)."""
 from __future__ import annotations
 
 import pytest
+from duckref import (
+    assert_rolled_match,
+    assert_stats_match,
+    assert_violations_match,
+    reference,
+    sorted_rows,
+)
 from pyspark.sql import functions as F
 
-from np_data_validation_spark.operators import stats as S
 from np_data_validation_spark.plans import onepass
-from np_data_validation_spark.plans.oracle import validate_batch
 
 
 @pytest.fixture(scope="module")
@@ -21,10 +26,19 @@ def frames(seq_man):
 
 
 @pytest.fixture(scope="module")
-def onepass_result(spark, frames, tmp_path_factory):
+def work(tmp_path_factory):
+    return str(tmp_path_factory.mktemp("onepass"))
+
+
+@pytest.fixture(scope="module")
+def onepass_result(spark, frames, work):
     snapshot, manifest = frames
-    work = str(tmp_path_factory.mktemp("onepass"))
     return onepass.validate_onepass(spark, snapshot, manifest, work)
+
+
+@pytest.fixture(scope="module")
+def duck(frames):
+    return reference(*frames)
 
 
 def _sorted_rows(df, cols):
@@ -34,22 +48,31 @@ def _sorted_rows(df, cols):
     )
 
 
-def test_rolled_matches_validate_batch(spark, frames, onepass_result):
-    snapshot, manifest = frames
-    rolled_ref, _, _ = validate_batch(snapshot, manifest, persist=True)
-    cols = onepass.ROLLED_PUBLIC_COLS
-    assert _sorted_rows(onepass_result.rolled, cols) == _sorted_rows(
-        rolled_ref.select(*cols), cols
+def test_rolled_matches_validate_batch(onepass_result, duck):
+    """Rolled verdicts equal the DuckDB formulation's, row for row."""
+    assert onepass_result.rolled.count() == 4000
+    assert_rolled_match(onepass_result, duck)
+
+
+def test_violations_match_validate_batch(onepass_result, duck):
+    """Violations equal the DuckDB formulation's, row for row."""
+    assert duck["violations"]
+    assert_violations_match(onepass_result, duck)
+
+
+def test_pairs_match_duckdb(spark, onepass_result, duck, work):
+    """The merged pair table (stage-1 hits + probe outcomes, each identity
+    row standing for s_mult raw rows) equals the DuckDB formulation's raw
+    pair multiset — per-row probe semantics on mixed-content duplicates
+    and null identity columns included (both present in the fixture)."""
+    cols = ["doc_id", "source", "n_tok", "tok_hash",
+            "m_source", "m_n_tok", "m_tok_hash", "verdict_code"]
+    merged = onepass.merged_pairs(
+        spark.read.parquet(f"{work}/pairs_stage1"),
+        spark.read.parquet(f"{work}/pairs_probe"),
     )
-
-
-def test_violations_match_validate_batch(spark, frames, onepass_result):
-    snapshot, manifest = frames
-    _, viols_ref, _ = validate_batch(snapshot, manifest, persist=True)
-    cols = ["doc_id", "source", "violation", "detail"]
-    got = _sorted_rows(onepass_result.violations, cols)
-    want = _sorted_rows(viols_ref, cols)
-    assert got == want
+    got = [r.asDict() for r in merged.collect() for _ in range(r["s_mult"])]
+    assert sorted_rows(got, cols) == sorted_rows(duck["pairs"], cols)
 
 
 def test_violations_cover_all_classes(onepass_result):
@@ -68,21 +91,9 @@ def test_violations_cover_all_classes(onepass_result):
     } <= classes
 
 
-def test_stats_match_partition_stats(spark, frames, onepass_result):
-    snapshot, _ = frames
-    cols = [
-        "source", "n_rows", "n_tok_min", "n_tok_max", "n_tok_sum",
-        "n_tok_null_rate", "tokens_null_rate", "is_global",
-    ]
-    got = _sorted_rows(onepass_result.stats, cols)
-    want = _sorted_rows(S.partition_stats(snapshot), cols)
-    assert got == want
-    # avg compared with tolerance (double arithmetic order differs)
-    got_avg = {r["source"]: r["n_tok_avg"] for r in onepass_result.stats.collect()}
-    want_avg = {r["source"]: r["n_tok_avg"] for r in S.partition_stats(snapshot).collect()}
-    assert set(got_avg) == set(want_avg)
-    for k, v in want_avg.items():
-        assert got_avg[k] == pytest.approx(v, rel=1e-12)
+def test_stats_match_partition_stats(onepass_result, duck):
+    """Per-source and global stats equal the DuckDB formulation's."""
+    assert_stats_match(onepass_result, duck)
 
 
 def test_mixed_duplicate_ranks(seq_man, onepass_result):
@@ -127,25 +138,6 @@ def test_probe_found_null_ntok_not_missing(seq_man, onepass_result):
         ).collect()
     }
     assert set(status.values()) == {"unknown"}, status
-
-
-def test_materialize_pairs_matches_classify_pairs(spark, frames, tmp_path):
-    """The write-once-derive oracle plan (plans.oracle.materialize_pairs)
-    must produce the same classified pair multiset as the in-memory plan —
-    including per-identity probe semantics on mixed-content duplicates and
-    null identity columns (both present in the fixture)."""
-    from np_data_validation_spark.functions.hashing import with_tok_hash
-    from np_data_validation_spark.operators import verdicts as V
-    from np_data_validation_spark.plans.oracle import materialize_pairs
-
-    snapshot, manifest = frames
-    mat = materialize_pairs(spark, snapshot, manifest, str(tmp_path / "mat"))
-    ref = V.classify_pairs(with_tok_hash(snapshot), manifest, persist=True)
-    cols = ["doc_id", "source", "n_tok", "tok_hash",
-            "m_doc_id", "m_source", "m_n_tok", "m_tok_hash", "verdict_code"]
-    assert _sorted_rows(mat.select(*cols), cols) == _sorted_rows(
-        ref.select(*cols), cols
-    )
 
 
 def test_onepass_plan_shape(spark, frames):

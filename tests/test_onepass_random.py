@@ -1,4 +1,4 @@
-"""Randomized one-pass vs plans.oracle.validate_batch equivalence sweep.
+"""Randomized one-pass vs DuckDB (queries.onepass_sql) equivalence sweep.
 
 The labeled fixture is shaped: every fault class appears, but only in the
 combinations synth injects. ADVICE r2 found two real bugs precisely in
@@ -6,18 +6,19 @@ shapes the fixture lacked (mixed-identity duplicate groups; null identity
 columns through the probe). This sweep generates adversarially dense random
 tables — heavy doc_id collisions, null tokens / null n_tok, wrong n_tok,
 renamed + cross-content manifest rows, random hash noise — and asserts the
-one-pass plan equals the two-stage reference plan row for row on rolled
-verdicts AND violations. Seeds are fixed: failures reproduce exactly.
+one-pass plan equals the DuckDB formulation row for row on rolled
+verdicts, violations and stats. Seeds are fixed: failures reproduce
+exactly.
 """
 
 from __future__ import annotations
 
 import numpy as np
 import pytest
+from duckref import assert_matches_reference
 
 from np_data_validation_spark.functions.hashing import with_tok_hash
 from np_data_validation_spark.plans import onepass
-from np_data_validation_spark.plans.oracle import validate_batch
 
 
 def _rand_tables(spark, seed: int):
@@ -79,11 +80,8 @@ def _key(df, cols):
 def test_onepass_equivalence_random(spark, tmp_path, seed):
     snap, man = _rand_tables(spark, seed)
     res = onepass.validate_onepass(spark, snap, man, str(tmp_path / f"w{seed}"))
-    rolled_ref, viols_ref, _ = validate_batch(snap, man, persist=True)
-    cols = onepass.ROLLED_PUBLIC_COLS
-    assert _key(res.rolled, cols) == _key(rolled_ref.select(*cols), cols)
-    vcols = ["doc_id", "source", "violation", "detail"]
-    assert _key(res.violations, vcols) == _key(viols_ref.select(*vcols), vcols)
+    ref = assert_matches_reference(res, snap, man)
+    assert ref["violations"]
 
 
 @pytest.mark.parametrize("seed", [737, 848])

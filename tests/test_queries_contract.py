@@ -79,3 +79,21 @@ def test_sampled_value_parity(spark, duck, name):
     assert len(sdf) == len(odf), name
     assert sorted(sdf.columns) == sorted(odf.columns), name
     assert _value_hash(sdf) == _value_hash(odf), name
+
+
+def test_schema_memo_sees_rewritten_table(spark, tmp_path):
+    """A table rewritten with a different schema in the same process is
+    read with its new schema, not the memoized one."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from np_data_validation_spark import queries as Q
+
+    path = str(tmp_path / "documents.parquet")
+    pq.write_table(pa.table({"doc_id": [1, 2], "text": ["a", "b"]}), path)
+    assert Q._t(spark, str(tmp_path), "documents").columns == ["doc_id", "text"]
+    assert Q._t(spark, str(tmp_path), "documents").columns == ["doc_id", "text"]
+    pq.write_table(pa.table({"doc_id": [3], "lang": ["en"], "n_chars": [5]}), path)
+    df = Q._t(spark, str(tmp_path), "documents")
+    assert df.columns == ["doc_id", "lang", "n_chars"]
+    assert [tuple(r) for r in df.collect()] == [(3, "en", 5)]

@@ -99,19 +99,6 @@ def test_onepass_auto_salting_stays_off_uniform(spark, tmp_path):
     assert res.salt_buckets_used is None
 
 
-def test_choose_join_strategies(spark):
-    left = spark.createDataFrame([("a", 1)], "k string, v int")
-    right = spark.createDataFrame([("a", 2)], "k string, w int")
-    for strat, rows in (("broadcast", None), ("shuffle", None), ("auto", 1)):
-        out = skew.choose_join(left, right, ["k"], "inner", strategy=strat, right_rows=rows)
-        assert out.count() == 1
-    # explain shows broadcast for the broadcast strategy
-    plan = skew.choose_join(
-        left, right, ["k"], "inner", strategy="broadcast"
-    )._jdf.queryExecution().executedPlan().toString()
-    assert "Broadcast" in plan
-
-
 def _mass_dup_manifest(spark, n_missed=300, hot_copies=500):
     """VERDICT-r3 #3 fixture: every snapshot identity misses stage 1 (no
     doc_id counterparts), and the manifest's content-hash column is skewed —

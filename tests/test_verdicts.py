@@ -6,15 +6,16 @@
 2. An exhaustive property test: every (subject x counterpart) combination
    over small value domains, compared against a faithful Python oracle of
    the reference's __eq__ decision tree (:547-628).
-3. End-to-end: synth dataset with injected faults -> per-label expected
-   final verdicts and row statuses.
+3. End-to-end: synth dataset with injected faults through the one-pass
+   plan -> per-label expected final verdicts, row statuses and violation
+   classes.
 """
 
 import pytest
 from pyspark.sql import functions as F
 
-from np_data_validation_spark.functions.hashing import with_tok_hash
 from np_data_validation_spark.operators import verdicts as V
+from np_data_validation_spark.plans.onepass import validate_onepass
 
 COLS = ["doc_id", "source", "n_tok", "tok_hash", "m_doc_id", "m_source", "m_n_tok", "m_tok_hash"]
 
@@ -151,11 +152,11 @@ EXPECTED_FINAL = {
 
 
 @pytest.fixture(scope="module")
-def classified(seq_man):
+def classified(spark, seq_man, tmp_path_factory):
     seq, man, labels = seq_man
-    pairs = V.classify_pairs(with_tok_hash(seq), man, join_strategy="auto")
-    rolled = V.rollup_verdicts(pairs).toPandas().set_index("doc_id")
-    return pairs, rolled, labels
+    res = validate_onepass(spark, seq, man, str(tmp_path_factory.mktemp("verdicts")))
+    rolled = res.rolled.toPandas().set_index("doc_id")
+    return res.violations, rolled, labels
 
 
 def test_end_to_end_final_verdicts(classified):
@@ -174,8 +175,10 @@ def test_end_to_end_final_verdicts(classified):
 
 
 def test_violation_extraction(classified):
-    pairs, _, labels = classified
-    vio = V.extract_violations(pairs).toPandas()
+    violations, _, labels = classified
+    vio = violations.filter(
+        F.col("violation").isin(list(V.VIOLATION_CLASS.values()))
+    ).toPandas()
     by_class = vio.groupby("violation")["doc_id"].apply(set).to_dict()
     cases = labels.groupby("case")["doc_id"].apply(set).to_dict()
     assert by_class["SIZE_MISMATCH"] == cases["unsynced_data"]
